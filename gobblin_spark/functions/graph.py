@@ -93,8 +93,10 @@ def connected_components(
                  F.max("_old").alias("_old"))
             .localCheckpoint()
         )
+        # null-safe: a node with no previous label counts as a change,
+        # never as silently converged
         changed = (
-            fused.filter(F.col("component") != F.col("_old"))
+            fused.filter(~F.col("component").eqNullSafe(F.col("_old")))
             .limit(1)
             .count()
         )

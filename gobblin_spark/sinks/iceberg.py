@@ -47,9 +47,9 @@ the write-audit-publish pattern), EXACTLY-ONCE streaming epochs
 summary in the same metadata commit), true COMPARE-AND-SWAP commits
 (metadata() stamps the read version; commits target base+1 with
 create-fails-if-exists, retried with a full re-plan on collision),
-and a SESSIONLESS LOCAL mode (spark=None, plain-file IO) for commit
-hooks that run outside the JVM — the gobblin_iceberg DSv2 faces in
-sources/datasource.py build on all of it.
+and a SESSIONLESS mode (spark=None: plain-file IO locally, pyarrow.fs
+remotely) for code that runs outside the JVM — the one metadata core
+the gobblin_iceberg DSv2 faces in sources/datasource.py adapt.
 
 Catalog integration is out of scope — with the iceberg-spark-runtime
 jar on the classpath use the real catalog instead
@@ -726,7 +726,7 @@ def _widen_float32_bounds(lo: float, hi: float) -> tuple[float, float]:
 def _range_may_match(lo, hi, op: str, value) -> bool:
     """Scan-planning core: can any v in the inclusive range [lo, hi]
     satisfy ``v op value``? Shared by file-level bounds
-    (_entry_may_match) and manifest-level field_summary pruning so
+    (_file_may_match) and manifest-level field_summary pruning so
     the two levels can never disagree on comparison semantics."""
     if op in ("=", "=="):
         return lo <= value <= hi
@@ -1183,9 +1183,8 @@ _EQ_RUN_CAP = 16
 
 def _metadata_version_candidates(names) -> list[int]:
     """Version numbers parsed from metadata file basenames, newest
-    first — ONE copy of the lost-hint recovery's candidate rule,
-    shared by the native reader and the sessionless DSv2 face
-    (review r13 pass 7)."""
+    first — the lost-hint recovery's candidate rule (review r13
+    pass 7)."""
     return sorted(
         (int(m.group(1)) for m in
          (_re_mod.fullmatch(r"v(\d+)\.metadata\.json", n)
@@ -1262,15 +1261,28 @@ def _is_exists_error(ex: BaseException) -> bool:
             or "already exists" in msg.lower())
 
 
+def _is_missing_error(ex: BaseException) -> bool:
+    """Classify a read failure: True only for a genuinely missing
+    file — plain IO raises FileNotFoundError, pyarrow.fs and Py4J
+    carry the class name (or the Hadoop wording) in the message. Every
+    hint/metadata probe decides "absent" here, never inline."""
+    msg = str(ex)
+    return (isinstance(ex, FileNotFoundError)
+            or "FileNotFoundException" in msg or "does not exist" in msg)
+
+
 class IcebergTable:
     """A HadoopTables-layout Iceberg v2 table on any Hadoop-visible FS.
 
-    ``spark=None`` puts the handle in SESSIONLESS LOCAL mode: metadata
-    and manifest IO go through plain Python file IO (local paths
-    only). This exists for driver-side commit hooks that run OUTSIDE
-    the Spark session — the gobblin_iceberg DSv2 writer's commit()
-    executes in a separate Python worker with no JVM. DataFrame
-    operations (read/append_dataframe/...) still need a session."""
+    ``spark=None`` puts the handle in SESSIONLESS mode: no JVM, no
+    session. Bare and ``file:`` paths take plain Python file IO;
+    remote schemes (s3:/hdfs:/gs:) route through the pyarrow.fs
+    helpers (``_fs_from_uri``). This handle is the ONE metadata core
+    of the gobblin_iceberg DSv2 faces (sources/datasource.py): the
+    batch and stream readers plan through metadata()/_entries()/
+    _file_may_match(), and both writers commit through append_files()
+    from Python workers that have no JVM. DataFrame operations
+    (read/append_dataframe/...) still need a session."""
 
     def __init__(self, spark: SparkSession | None, location: str,
                  planning: str = "driver"):
@@ -1397,10 +1409,7 @@ class IcebergTable:
                     f"{self.location}/metadata/version-hint.text"
                 ).decode().strip()
             except Exception as ex:
-                msg = str(ex)
-                if ("FileNotFoundException" in msg
-                        or "does not exist" in msg
-                        or isinstance(ex, FileNotFoundError)):
+                if _is_missing_error(ex):
                     # a missing hint does not prove an empty location:
                     # a committer can crash before the very first
                     # flip, or a PRUNED table (expire keeps only the
@@ -1409,6 +1418,7 @@ class IcebergTable:
                     # refuses to clobber and readers adopt the newest
                     # committed version
                     return self._recover_version_no_hint()
+                msg = str(ex)
                 if "Checksum" in msg or "EOFException" in msg:
                     # the same torn-rewrite window seen through the
                     # Hadoop path: the .crc sidecar lags the data
@@ -1454,10 +1464,7 @@ class IcebergTable:
                 else:
                     raw = self._read_bytes(nxt)
             except Exception as ex:
-                msg = str(ex)
-                if ("FileNotFoundException" in msg
-                        or "does not exist" in msg
-                        or isinstance(ex, FileNotFoundError)):
+                if _is_missing_error(ex):
                     return v
                 raise
             try:
@@ -1520,10 +1527,7 @@ class IcebergTable:
             # contiguous successor (the fast-forward probe stops at
             # the first gap) — recover from the directory listing
             # like the missing-hint path (review r13 pass 7)
-            msg = str(ex)
-            if not (isinstance(ex, FileNotFoundError)
-                    or "FileNotFoundException" in msg
-                    or "does not exist" in msg):
+            if not _is_missing_error(ex):
                 raise
             v = self._recover_version_no_hint()
             if v == 0:
@@ -3448,10 +3452,55 @@ class IcebergTable:
                 return True  # a drop
         return False
 
-    def _entry_may_match(self, e: dict, f: dict, op: str, value) -> bool:
-        """Scan planning (spec "Scan Planning" / InclusiveMetricsEvaluator
-        semantics): can any row of this data file satisfy `col op value`?
-        Files without bounds for the column can never be pruned."""
+    def _file_may_match(self, e: dict, f: dict, op: str, value,
+                        spec: list[dict]) -> bool:
+        """Per-file scan planning (spec "Scan Planning" /
+        InclusiveMetricsEvaluator semantics): can any row of the data
+        file behind entry *e* satisfy ``f op value``? *spec* is the
+        ``_spec_info`` of the FILE'S OWN partition spec. read() and the
+        gobblin_iceberg DSv2 planner both call this, so the two faces
+        prune exactly the same files.
+
+        Partition-tuple checks come first (each predicate projected
+        through the file's spec): an EXACT per-file value beats min/max
+        bounds (and exists even for string columns, whose bounds are
+        deliberately omitted); tuples are keyed by source field-id,
+        rename-proof. create() restricts partition types to those
+        whose dir segment round-trips exactly, so the comparison is
+        typed; any residual type mismatch falls through to bounds
+        (never a silent False that would prune a matching file).
+        Bounds are ALWAYS consulted too — for bucket fields the tuple
+        check is necessarily weak. Files without bounds for the column
+        can never be pruned; float bounds widen one float32 ulp like
+        the manifest summaries, and incomparable values keep the
+        file."""
+        import datetime as _dt
+
+        part = e["info"].partition or {}
+        for si in spec:
+            if si["source_id"] != f["id"]:
+                continue
+            proj = _project_pred(si, op, value)
+            if proj is None:
+                continue
+            pop, pval = proj
+            v = part.get(str(si["source_id"]))
+            if v is None:
+                continue
+            q = pval
+            if type(q) is _dt.date and isinstance(v, str):
+                q = q.isoformat()  # dates JSON-decode as ISO text
+            if type(v) is not type(q) and not (
+                    isinstance(v, (int, float))
+                    and isinstance(q, (int, float))):
+                continue
+            try:
+                ok = {"=": v == q, "==": v == q, ">": v > q,
+                      ">=": v >= q, "<": v < q, "<=": v <= q}[pop]
+            except TypeError:
+                continue
+            if not ok:
+                return False
         lo = (e["info"].lower_bounds or {}).get(f["id"])
         hi = (e["info"].upper_bounds or {}).get(f["id"])
         if lo is None or hi is None:
@@ -3461,7 +3510,12 @@ class IcebergTable:
         v = _logical_to_ice(value, t)
         if mn is None or mx is None or v is None:
             return True
-        return _range_may_match(mn, mx, op, v)
+        if t == "float":
+            mn, mx = _widen_float32_bounds(mn, mx)
+        try:
+            return _range_may_match(mn, mx, op, v)
+        except TypeError:
+            return True
 
     def _partition_attach_ctx(self, md: dict, snapshot_id: int | None):
         """Shared planning context for identity-partition
@@ -3594,7 +3648,7 @@ class IcebergTable:
 
         # predicates stay in SOURCE space here: partition evolution
         # means each manifest/file projects them through its OWN spec
-        # (_entries for summaries, _may_match per file)
+        # (_entries for summaries, _file_may_match per file)
         prune_parts = None
         if prune_filters and any(
                 s["fields"] for s in md_r["partition-specs"]):
@@ -3641,47 +3695,6 @@ class IcebergTable:
         spec_src_ids = (set().union(*ident_ids_by_spec.values())
                         if ident_ids_by_spec else set())
 
-        def _may_match(e, f, op, value):
-            # partition-tuple checks first (each predicate projected
-            # through THE FILE'S OWN spec): an EXACT per-file value
-            # beats min/max bounds (and exists even for string
-            # columns, whose bounds are deliberately omitted); tuples
-            # are keyed by source field-id, rename-proof. create()
-            # restricts partition types to those whose dir segment
-            # round-trips exactly, so the comparison below is typed;
-            # any residual type mismatch falls through to bounds
-            # (never a silent False that would prune a matching
-            # file). Bounds are ALWAYS consulted too — for bucket
-            # fields the tuple check is necessarily weak.
-            import datetime as _dt
-
-            part = e["info"].partition or {}
-            for si in _spec(e.get("spec_id", 0)):
-                if si["source_id"] != f["id"]:
-                    continue
-                proj = _project_pred(si, op, value)
-                if proj is None:
-                    continue
-                pop, pval = proj
-                v = part.get(str(si["source_id"]))
-                if v is None:
-                    continue
-                q = pval
-                if type(q) is _dt.date and isinstance(v, str):
-                    q = q.isoformat()  # dates JSON-decode as ISO text
-                if type(v) is not type(q) and not (
-                        isinstance(v, (int, float))
-                        and isinstance(q, (int, float))):
-                    continue
-                try:
-                    ok = {"=": v == q, "==": v == q, ">": v > q,
-                          ">=": v >= q, "<": v < q, "<=": v <= q}[pop]
-                except TypeError:
-                    continue
-                if not ok:
-                    return False
-            return self._entry_may_match(e, f, op, value)
-
         n_total = len(data)
         residual = []
         if prune_filters:
@@ -3692,7 +3705,8 @@ class IcebergTable:
                 if f is None:
                     raise ValueError(f"prune column {col} not in schema")
                 data = [e for e in data
-                        if _may_match(e, f, op, value)]
+                        if self._file_may_match(
+                            e, f, op, value, _spec(e.get("spec_id", 0)))]
                 residual.append((col, op, value))
         self.last_scan = {"files_total": n_total,
                           "files_scanned": len(data)}

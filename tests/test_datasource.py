@@ -546,6 +546,11 @@ def test_iceberg_datasource_reads_and_prunes(spark, tmp_path):
     r_k = DS._IcebergReader({"path": loc}, sch)
     r_k.prune = [("k", "=", 3)]
     assert len(r_eu._plan()) < n_all and len(r_k._plan()) < n_all
+    # parity: the DSv2 planner and IcebergTable.read share one pruning
+    # core, so they keep exactly the same files for each predicate
+    for r, pred in ((r_eu, ("region", "=", "eu")), (r_k, ("k", "=", 3))):
+        t.read(prune_filters=[pred])
+        assert len(r._plan()) == t.last_scan["files_scanned"]
 
     # snapshot_id option time-travels
     s1 = t.snapshots()[0]["snapshot-id"]
@@ -638,6 +643,10 @@ def test_iceberg_datasource_bounds_pruning(spark, tmp_path):
     r2 = DS._IcebergReader({"path": loc}, df.schema)
     r2.prune = [("v", "<", 5.0)]
     assert len(r2._plan()) < n_all
+    # parity with the native planner on the same table (one pruning core)
+    for rd, pred in ((r, ("k", ">=", 30)), (r2, ("v", "<", 5.0))):
+        t.read(prune_filters=[pred])
+        assert len(rd._plan()) == t.last_scan["files_scanned"]
     # values stay exact through the full engine path
     DS.register(spark)
     got = (spark.read.format("gobblin_iceberg").option("path", loc)
@@ -645,7 +654,7 @@ def test_iceberg_datasource_bounds_pruning(spark, tmp_path):
     assert sorted(rr.k for rr in got.collect()) == list(range(30, 40))
 
 
-def test_iceberg_stream_incremental(spark, tmp_path):
+def test_iceberg_stream_incremental(spark, tmp_path, monkeypatch):
     """readStream.format('gobblin_iceberg'): offsets are table
     sequence numbers, a checkpointed resume consumes ONLY snapshots
     committed since, readBetweenOffsets replays exact seq windows
@@ -683,6 +692,15 @@ def test_iceberg_stream_incremental(spark, tmp_path):
     assert sr.initialOffset() == {"seq": 4}
     rep = list(sr.readBetweenOffsets({"seq": 1}, {"seq": 3}))
     assert sorted(r[0] for r in rep) == list(range(10, 30))
+    # ONE metadata read per micro-batch: the offset and the plan come
+    # from the same table state
+    reads = []
+    real_md = IcebergTable.metadata
+    monkeypatch.setattr(IcebergTable, "metadata",
+                        lambda self: reads.append(1) or real_md(self))
+    got, end = sr.read({"seq": 3})
+    assert sorted(r[0] for r in got) == list(range(30, 35))
+    assert end == {"seq": 4} and len(reads) == 1
 
 
 def test_iceberg_stream_replace_in_window(spark, tmp_path):
